@@ -42,8 +42,11 @@ object SparkEntry {
       .filter(col("doc_id") === 0)
       .withColumn("text", concat(col("text"), lit(" graftmarker")))
     Indexer.upsertIntoIndex(spark, indexPath, updated)
-    Indexer.lookupInIndex(spark, indexPath, "graftmarker")
-      .unionAll(Indexer.lookupInIndex(spark, indexPath, "the"))
+    // read AFTER the in-place upsert: a relation resolved earlier would
+    // still list the replaced files
+    val upserted = spark.read.parquet(indexPath)
+    Indexer.lookupInIndex(upserted, "graftmarker")
+      .unionAll(Indexer.lookupInIndex(upserted, "the"))
   }
 
   /** Shared ANN-recall evaluation geometry: every recall-family

@@ -52,8 +52,12 @@ object Graph {
     // orderkey over S sub-keys (probe rows hash-salted, build side
     // replicated S×) — output is IDENTICAL (spec-pinned), only the
     // shuffle routing changes; default 0 keeps the plain join where AQE's
-    // runtime skew split already covers moderate skew.
-    val salt = spark.conf.get("spark.graft.copurchaseSalt", "0").toInt
+    // runtime skew split already covers moderate skew. Parsed
+    // defensively: a malformed value falls back to the plain join instead
+    // of throwing mid-query.
+    val salt = scala.util.Try(
+      spark.conf.get("spark.graft.copurchaseSalt", "0").trim.toInt)
+      .getOrElse(0)
     val joined =
       if (salt > 1) Skew.saltedJoin(a, b, "ok", salt)
       else a.join(b, "ok")

@@ -105,8 +105,7 @@ object IndexQueries {
                     nQueryDocs: Int, k: Int): DataFrame = {
     // weights sit behind a repartition(term) exchange: term is the
     // dot-product join key, so the join needs no further shuffle
-    val p = spark.read.parquet(MaterializedIndex.ensure(spark, sfDir))
-      .select(col("term"), col("doc_id"), col("tf"))
+    val p = MaterializedIndex.postings(spark, sfDir)
       .repartition(col("term"))
     // doc_id is the documents PK: a plain count(*) IS the distinct count,
     // without the distinct's extra doc_id exchange
@@ -160,47 +159,40 @@ object IndexQueries {
 
   /** BM25 ranking (Robertson–Spärck Jones, k1=1.2, b=0.75) served from
     * the materialized index — the standard retrieval scorer a tf-idf-only
-    * engine is missing. Everything derives from postings: document
-    * lengths (one sum per doc), the corpus stats (two scalars,
-    * crossJoin-broadcast), per-term document frequencies (only the query
-    * terms' postings are read). Scoring is a projection over the query
-    * terms' posting lists; the global top-k is a TakeOrdered. Work scales
-    * with the query terms' posting lists — never the corpus.
+    * engine is missing. The query terms' postings are read from their
+    * letter partitions only; per-term document frequencies are one tiny
+    * aggregate over them (one row per query term, broadcast). Document
+    * lengths come from [[MaterializedIndex.docLengths]], a table of one row
+    * per indexed document built once per index, and its two corpus scalars
+    * (n_docs, avgdl) enter the plan as literals. Scoring is a projection
+    * over the query postings joined to the doc lengths, then one per-doc
+    * sum; the global top-k is a TakeOrdered. Work per query is the query
+    * terms' posting lists plus the doc-length table — never a pass over
+    * the whole index.
     */
   def bm25TopK(spark: SparkSession, sfDir: String, terms: Seq[String],
                k: Int): DataFrame = {
-    val post = MaterializedIndex.postings(spark, sfDir)
-    // the explicit isNotNull mirrors the null filter the doc_id join pushes
-    // into ITS dl branch — with both branches byte-identical, ReuseExchange
-    // shares ONE per-doc aggregation between the join and the stats scalar
-    // instead of shuffling the postings by doc_id twice (doc_id is never
-    // null in the index, so the filter is semantically free)
-    val dl = post.filter(col("doc_id").isNotNull)
-      .groupBy("doc_id").agg(sum(col("tf")).as("dl"))
-    val stats = dl.agg(
-      (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"),
-      count(lit(1)).as("n_docs"))
-    val qpost = post.filter(col("term").isin(terms: _*))
+    val MaterializedIndex.DocLengths(dl, nDocs, avgdl) =
+      MaterializedIndex.docLengths(spark, sfDir)
+    val qpost = MaterializedIndex.index(spark, sfDir)
+      .filter(col("first_letter").isin(terms.map(_.take(1)).distinct: _*) &&
+        col("term").isin(terms: _*))
+      .select("term", "doc_id", "tf")
     // postings rows are unique (term, doc_id): count(*) IS the document
     // frequency. One row per query term → always broadcast-safe, so the
     // df join costs no exchange of the posting lists
     val dfreq = qpost.groupBy("term").agg(count(lit(1)).as("df"))
     qpost
       .join(broadcast(dfreq), "term")
-      .crossJoin(broadcast(stats))
       .withColumn("idf",
-        log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1.0))
-      // big relation LAST: dl keeps the doc_id hash partitioning of its
-      // aggregation, the scored query postings are the side that moves,
-      // and the final per-doc sum rides the join's output partitioning —
-      // no exchange in this plan ever moves the full dl relation again
+        log((lit(nDocs) - col("df") + 0.5) / (col("df") + 0.5) + 1.0))
       .join(dl, "doc_id")
       // constants written exactly as in the oracle SQL (k1=1.2, b=0.75,
       // k1+1 as the literal 2.2) so both engines fold identical doubles
       .withColumn("s",
         col("idf") * col("tf") * lit(2.2) /
           (col("tf") + lit(1.2) *
-            (lit(1.0) - lit(0.75) + lit(0.75) * col("dl") / col("avgdl"))))
+            (lit(1.0) - lit(0.75) + lit(0.75) * col("dl") / lit(avgdl))))
       .groupBy("doc_id")
       .agg(round(sum(col("s")), 6).as("score"))
       .orderBy(desc("score"), col("doc_id"))
@@ -215,9 +207,11 @@ object IndexQueries {
     * stack ships, robust to the two scorers' incomparable scales.
     *
     * Scale posture: each leg is the already-audited top-`perList`
-    * pipeline (work ∝ posting lists / corpus scan, exchanges O(k)); the
-    * fusion itself touches ≤ 2·perList rows — rank windows and the
-    * full-outer join are k-bounded, never corpus-bounded.
+    * pipeline — the BM25 leg reads the query terms' posting lists plus
+    * the one-row-per-document length table, the cosine leg scans the
+    * vectors; both end in O(k) exchanges. The fusion itself touches
+    * ≤ 2·perList rows — rank windows and the full-outer join are
+    * k-bounded, never corpus-bounded.
     */
   def hybridRRF(spark: SparkSession, sfDir: String, terms: Seq[String],
                 queryVec: Int, perList: Int, k: Int): DataFrame = {
@@ -530,7 +524,7 @@ object IndexQueries {
     */
   def partitionChecksums(spark: SparkSession, sfDir: String): DataFrame = {
     val P = 1000000007L
-    spark.read.parquet(MaterializedIndex.ensure(spark, sfDir))
+    MaterializedIndex.index(spark, sfDir)
       .select(col("first_letter").cast("string").as("first_letter"),
         col("term"), col("doc_id"), col("tf"))
       .withColumn("termh", graft.functions.PolyHashExpr.polyHash(col("term")))

@@ -177,10 +177,12 @@ object Indexer {
     * the `first_letter` predicate prunes the scan to one partition
     * directory — exactly the reference's "open only `./index/<c>`"
     * (`helper_reduce.c:238-242`), but enforced by Catalyst's partition
-    * pruning (asserted in IndexerSpec).
+    * pruning (asserted in IndexerSpec). `index` is the index as read from
+    * its path; served indexes pass their once-resolved relation
+    * ([[MaterializedIndex.index]]).
     */
-  def lookupInIndex(spark: SparkSession, indexPath: String, term: String): DataFrame =
-    spark.read.parquet(indexPath)
+  def lookupInIndex(index: DataFrame, term: String): DataFrame =
+    index
       .filter(col("first_letter") === term.take(1) && col("term") === term)
       .select("term", "doc_id", "tf")
       .orderBy(desc("tf"), col("doc_id"))

@@ -84,8 +84,7 @@ object RefIndexInterop {
     */
   def refIndexRuntimePruned(spark: SparkSession, sfDir: String,
                             minTf: Long = 10L): DataFrame = {
-    val dim = spark.read.parquet(
-        graft.operators.MaterializedIndex.ensure(spark, sfDir))
+    val dim = graft.operators.MaterializedIndex.index(spark, sfDir)
       .filter(col("tf") >= minTf)
       .select(col("first_letter")).distinct()
     readRefIndex(spark, sfDir)

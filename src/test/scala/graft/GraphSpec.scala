@@ -93,4 +93,17 @@ class GraphSpec extends SparkTestBase {
       assert(salted.toSet === plain.toSet)
     } finally spark.conf.unset("spark.graft.copurchaseSalt")
   }
+
+  test("a malformed copurchaseSalt falls back to the plain join") {
+    val plain = Graph.copurchaseEdges(spark, sf).as[(Long, Long)].collect()
+    spark.conf.set("spark.graft.copurchaseSalt", "eight")
+    try {
+      val edges = Graph.copurchaseEdges(spark, sf)
+      assert(!edges.queryExecution.analyzed.toString.contains("__salt"),
+        s"malformed salt still salted the join:\n${edges.queryExecution.analyzed}")
+      val got = edges.as[(Long, Long)].collect()
+      assert(got.length === plain.length)
+      assert(got.toSet === plain.toSet)
+    } finally spark.conf.unset("spark.graft.copurchaseSalt")
+  }
 }

@@ -1,6 +1,11 @@
 package graft
 
-import graft.operators.{Indexer, MaterializedIndex}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.functions._
+
+import graft.operators.{IndexQueries, Indexer, MaterializedIndex}
 
 class MaterializedIndexSpec extends SparkTestBase {
   import spark.implicits._
@@ -24,7 +29,6 @@ class MaterializedIndexSpec extends SparkTestBase {
   }
 
   test("prefix search: one pruned letter partition, pushed StartsWith, exact") {
-    import org.apache.spark.sql.functions._
     val q = MaterializedIndex.prefixSearch(spark, sf, "sc")
     val got = q.as[(String, Long, Long)].collect().toSeq
     assert(got.nonEmpty)
@@ -49,7 +53,6 @@ class MaterializedIndexSpec extends SparkTestBase {
   }
 
   test("served phrase search == corpus-scan bigram search; n-word phrases exact") {
-    import org.apache.spark.sql.functions._
     val served = MaterializedIndex.servePhrase(spark, sf, "key order")
       .as[(Long, Long)].collect().toSeq
     val scanned = graft.operators.IndexQueries.phraseSearch(spark, sf, "key order")
@@ -79,5 +82,111 @@ class MaterializedIndexSpec extends SparkTestBase {
     val mtimes2 = new java.io.File(p2).listFiles().map(_.lastModified()).toSeq
     assert(p1 === p2)
     assert(mtimes1 === mtimes2)
+  }
+
+  private def serveFrames(s: SparkSession): Seq[DataFrame] = Seq(
+    MaterializedIndex.termLookup(s, sf, "window"),
+    MaterializedIndex.multiTermAnd(s, sf, Seq("scan", "join")),
+    MaterializedIndex.prefixSearch(s, sf, "sc"),
+    MaterializedIndex.servePhrase(s, sf, "key order"),
+    IndexQueries.bm25TopK(s, sf, Seq("scan", "join", "filter"), 10))
+
+  /** BM25 over the whole index, formulated as before the doc-length table:
+    * doc lengths, n_docs and avgdl aggregated from every posting per query.
+    */
+  private def wholeIndexBm25(terms: Seq[String], k: Int): DataFrame = {
+    val post = spark.read.parquet(MaterializedIndex.ensure(spark, sf))
+      .select(col("term"), col("doc_id"), col("tf"))
+    val dl = post.filter(col("doc_id").isNotNull)
+      .groupBy("doc_id").agg(sum(col("tf")).as("dl"))
+    val stats = dl.agg(
+      (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"),
+      count(lit(1)).as("n_docs"))
+    val qpost = post.filter(col("term").isin(terms: _*))
+    val dfreq = qpost.groupBy("term").agg(count(lit(1)).as("df"))
+    qpost
+      .join(broadcast(dfreq), "term")
+      .crossJoin(broadcast(stats))
+      .withColumn("idf",
+        log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1.0))
+      .join(dl, "doc_id")
+      .withColumn("s",
+        col("idf") * col("tf") * lit(2.2) /
+          (col("tf") + lit(1.2) *
+            (lit(1.0) - lit(0.75) + lit(0.75) * col("dl") / col("avgdl"))))
+      .groupBy("doc_id")
+      .agg(round(sum(col("s")), 6).as("score"))
+      .orderBy(desc("score"), col("doc_id"))
+      .limit(k)
+  }
+
+  test("serve frames on an ensured index start no Spark job") {
+    // first use pays the builds: both indexes and the doc-length table
+    serveFrames(spark).foreach(_.collect())
+    val sc = spark.sparkContext
+    org.apache.spark.graftshim.ListenerBridge.waitUntilEmpty(sc)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      serveFrames(spark)
+      org.apache.spark.graftshim.ListenerBridge.waitUntilEmpty(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get() === 0,
+      s"building the serve frames started ${jobs.get()} Spark jobs")
+  }
+
+  test("bm25 scans only its query letters' partitions of the index") {
+    val idx = new java.io.File(MaterializedIndex.ensure(spark, sf))
+    val indexFiles = java.nio.file.Files.walk(idx.toPath)
+      .filter(_.toString.endsWith(".parquet")).count()
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val q = IndexQueries.bm25TopK(spark, sf, Seq("scan", "join", "filter"), 10)
+      q.collect()
+      val scans = q.queryExecution.executedPlan.collect {
+        case s: FileSourceScanExec
+            if s.relation.location.rootPaths.exists(_.getName == idx.getName) => s
+      }
+      assert(scans.nonEmpty, s"no index scan in:\n${q.queryExecution.executedPlan}")
+      scans.foreach { s =>
+        assert(s.partitionFilters.exists(_.references.exists(_.name == "first_letter")),
+          s"index scan without a first_letter partition filter:\n$s")
+        val read = s.metrics("numFiles").value
+        assert(read > 0 && read < indexFiles,
+          s"index scan read $read of $indexFiles files")
+      }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
+
+  test("bm25 from the doc-length table == the whole-index formulation") {
+    // multi-term, single-term, and a term absent from the corpus
+    Seq(Seq("scan", "join", "filter"), Seq("window"), Seq("scan", "qzxjvw"))
+      .foreach { terms =>
+        val got = IndexQueries.bm25TopK(spark, sf, terms, 10)
+          .as[(Long, Double)].collect().toSeq
+        val want = wholeIndexBm25(terms, 10).as[(Long, Double)].collect().toSeq
+        assert(got.nonEmpty, s"no rows for $terms")
+        assert(got === want, s"bm25 diverged for $terms")
+      }
+  }
+
+  test("a second session serves the same rows from relations of its own") {
+    val other = spark.newSession()
+    serveFrames(spark).zip(serveFrames(other)).foreach { case (mine, theirs) =>
+      assert(theirs.sparkSession eq other)
+      val relations = theirs.queryExecution.analyzed.collect {
+        case lr: LogicalRelation if lr.relation.isInstanceOf[HadoopFsRelation] =>
+          lr.relation.asInstanceOf[HadoopFsRelation]
+      }
+      assert(relations.nonEmpty && relations.forall(_.sparkSession eq other),
+        "a serve plan of the second session reads a relation of the first")
+      assert(theirs.collect().toSeq === mine.collect().toSeq)
+    }
   }
 }

@@ -38,7 +38,7 @@ class PlanBudgetSpec extends SparkTestBase {
     // groupBy+join-back paid a second full postings shuffle)
     "q_doc_similarity"  -> 8, // weights×3 consumers + dots/norms aggs + window + order
     "q_funnel"          -> 7, // 3 DISJOINT event-subset exchanges (≈ one full pass) + 3 one-row counts + order
-    "q_bm25_topk"       -> 5, // dl agg (partially reused) + stats + tiny dfreq + score agg; query-term postings never shuffle
+    "q_bm25_topk"       -> 2, // tiny dfreq agg + per-doc score agg; doc lengths are a prebuilt table (join broadcasts at test scale), no whole-index agg
     "q_tfidf_topk"      -> 3, // ONE postings exchange serves df window + rank window; n_docs + order
     "q_bigram_lm"       -> 2, // pair-count agg + w1-marginal window
     "q_boilerplate"     -> 5, // df agg + threshold broadcast + per-doc aggs + join + order
